@@ -73,13 +73,15 @@ design removes.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from typing import Any, Mapping, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from pandabase_spark.fs import HadoopFS
@@ -174,6 +176,13 @@ def _bloom_b64(positions: "set[int] | list[int]", m_bits: int = BLOOM_M) -> str:
     return base64.b64encode(bytes(buf)).decode("ascii")
 
 
+def _bloom_bit(col: str, seed: int) -> Column:
+    """Bit position of ``col``'s value under Bloom hash ``seed`` — the
+    one JVM expression the filters are built with (over the data) and
+    probed with (over a one-row frame of the looked-up value)."""
+    return F.pmod(F.xxhash64(col, F.lit(seed)), F.lit(BLOOM_M))
+
+
 def _bloom_maybe_contains(b64: str, positions: "list[int]") -> bool:
     """True unless some probe bit is unset (i.e. value provably absent)."""
     import base64
@@ -234,7 +243,7 @@ class TableMeta:
     generated: dict = field(default_factory=dict)
 
     def to_json(self) -> str:
-        return json.dumps(self.__dict__)
+        return json.dumps(asdict(self))
 
     @classmethod
     def from_json(cls, s: str) -> "TableMeta":
@@ -252,7 +261,16 @@ class TableMeta:
 
     @property
     def schema(self) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self.schema_json))
+        # parsed once per schema_json value: a read consults the schema
+        # several times, and schema evolution reassigns schema_json
+        hit = getattr(self, "_schema_parsed", None)
+        if hit is None or hit[0] != self.schema_json:
+            hit = (
+                self.schema_json,
+                T.StructType.fromJson(json.loads(self.schema_json)),
+            )
+            self._schema_parsed = hit
+        return hit[1]
 
 
 def _bucket_expr(keys: Sequence[str], num_buckets: int):
@@ -260,9 +278,7 @@ def _bucket_expr(keys: Sequence[str], num_buckets: int):
 
     xxhash64 is a JVM-side codegen'd expression — no Python boundary.
     """
-    return F.pmod(
-        F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)
-    ).cast("int")
+    return F.pmod(F.xxhash64(*keys), F.lit(num_buckets)).cast("int")
 
 
 def _is_version_file(name: str) -> bool:
@@ -401,6 +417,17 @@ class KeyedCatalog:
         return TableMeta.from_json(
             self.fs.read_text(f"{self._path(table_name)}/{META_FILE}")
         )
+
+    def _table_meta(self, table_name: str) -> TableMeta:
+        """:meth:`meta` of a qualified name, raising NameError for a
+        missing table — one file read when it exists, with no exists()
+        probe ahead of it."""
+        try:
+            return self.meta(table_name)
+        except Exception:
+            if not self.has_table(table_name):
+                raise NameError(f"no such table: {table_name}") from None
+            raise
 
     def _write_meta(self, table_name: str, m: TableMeta) -> None:
         self.fs.write_text_atomic(
@@ -608,21 +635,56 @@ class KeyedCatalog:
             if d.startswith(f"{PART_DIR}=")
             and (want is None or int(d.split("=", 1)[1]) in want)
         ]
-        schema = m.schema
-        sc = (man or {}).get("segcols", {}).get(seg)
-        if not sc:
-            return self.spark.read.schema(schema).parquet(*leaves)
-        phys_fields, aliases = [], []
-        for f in schema.fields:
-            stable = m.colmap.get(f.name, f.name)
-            phys = sc.get(stable, f.name)
-            phys_fields.append(T.StructField(phys, f.dataType, True))
-            aliases.append(F.col(phys).alias(f.name))
-        return (
-            self.spark.read.schema(T.StructType(phys_fields))
-            .parquet(*leaves)
-            .select(*aliases)
+        return self._scan_leaves(
+            m, leaves, (man or {}).get("segcols", {}).get(seg)
         )
+
+    def _scan_leaves(
+        self,
+        m: TableMeta,
+        paths: Sequence[str],
+        segcols: "Mapping[str, str] | None" = None,
+    ) -> DataFrame:
+        """The one scan every manifest read plans: the leaf dirs the
+        manifest names, under the table's CURRENT logical schema.
+
+        ``segcols`` ({stable identity -> physical name}, a segment's
+        manifest entry) reads a segment written before a column rename
+        through its old physical names, aliased to the current ones;
+        columns it lacks null-fill.
+
+        Above ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+        paths, Spark lists a scan's paths with a distributed "Listing
+        leaf files" job (0.45-0.8 s of a 64-leaf read on a 4-core
+        host); at or below it, on the driver. The manifest already
+        names every leaf, so the scan is a union of scans of at most
+        that many paths each — at or below the threshold, exactly one
+        scan."""
+        schema, aliases = m.schema, None
+        if segcols:
+            phys_fields, aliases = [], []
+            for f in schema.fields:
+                phys = segcols.get(m.colmap.get(f.name, f.name), f.name)
+                phys_fields.append(T.StructField(phys, f.dataType, True))
+                aliases.append(F.col(phys).alias(f.name))
+            schema = T.StructType(phys_fields)
+        n = int(
+            self.spark.conf.get(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold"
+            )
+        )
+        if n < 1:  # every listing is distributed; chunking can't help
+            n = max(1, len(paths))
+        reader = self.spark.read.schema(schema)
+        # max(1, ..): no paths still plans one (empty) scan
+        out = functools.reduce(
+            DataFrame.union,
+            [
+                reader.parquet(*paths[i : i + n])
+                for i in range(0, max(1, len(paths)), n)
+            ],
+        )
+        return out if aliases is None else out.select(*aliases)
 
     def _segment_stats(
         self,
@@ -694,11 +756,7 @@ class KeyedCatalog:
                     F.struct(
                         F.lit(ci).alias("ci"),
                         F.when(
-                            F.col(c).isNotNull(),
-                            F.pmod(
-                                F.xxhash64(F.col(c), F.lit(s)),
-                                F.lit(BLOOM_M),
-                            ),
+                            F.col(c).isNotNull(), _bloom_bit(c, s)
                         ).alias("p"),
                     )
                 )
@@ -957,28 +1015,36 @@ class KeyedCatalog:
         est = int(round(row["_n"] * max(0.0, row["_hr"] - row["_lr"])))
         return est, int(row["_n"])
 
+    def _literal_row(
+        self,
+        types: "Mapping[str, T.DataType]",
+        exprs: Sequence[str],
+        args: Sequence[Any] = (),
+    ) -> DataFrame:
+        """A one-row frame with one column per ``types`` entry, the
+        matching SQL literal or ``?`` marker of ``exprs`` (markers bind
+        ``args``, Python values) CAST to the column's type. Over
+        ``VALUES`` the plan folds to a LocalRelation, so the writer's
+        own expressions evaluated on it — a point key's bucket
+        (:meth:`_batch_buckets`), a Bloom probe's bits
+        (:func:`_bloom_bit`) — run on the driver: no Spark job, no
+        pandas/Arrow batch, and no hash re-implemented in Python."""
+        sel = ", ".join(
+            f"CAST({e} AS {dt.simpleString()}) AS `{name}`"
+            for e, (name, dt) in zip(exprs, types.items())
+        )
+        return self.spark.sql(
+            f"SELECT {sel} FROM VALUES (0)", args=list(args)
+        )
+
     def _bloom_positions(self, value: Any, dtype: T.DataType) -> list[int]:
         """Probe bit positions for ``value`` under the SAME JVM
-        expressions that built the filters (``xxhash64(lit(value)
-        cast col-type, seed) mod m``) — a 1-row driver-side job, so
-        Python never re-implements the hash and can never drift from
-        it."""
-        row = (
-            self.spark.range(1)
-            .select(
-                *[
-                    F.pmod(
-                        F.xxhash64(
-                            F.lit(value).cast(dtype), F.lit(s)
-                        ),
-                        F.lit(BLOOM_M),
-                    ).alias(f"p{s}")
-                    for s in range(BLOOM_K)
-                ]
-            )
-            .first()
+        expression that built the filters (:func:`_bloom_bit` of the
+        value cast to the column type), folded on the driver."""
+        row = self._literal_row({"v": dtype}, ["?"], [value]).select(
+            *[_bloom_bit("v", s) for s in range(BLOOM_K)]
         )
-        return [row[f"p{s}"] for s in range(BLOOM_K)]
+        return list(row.collect()[0])
 
     def _commit(
         self,
@@ -3645,8 +3711,8 @@ class KeyedCatalog:
         under casts the hash wouldn't see). Extra unrecognized AND
         conjuncts are fine: they only narrow the match set, never
         widen it past the pinned bucket. The bucket comes from
-        evaluating THE SAME _bucket_expr the layout writes with, on a
-        one-row literal frame (driver-local job, zero IO) — the
+        evaluating THE SAME _bucket_expr the layout writes with, folded
+        on the driver (:meth:`_literal_row`: no job, zero IO) — the
         arithmetic can never diverge from the writer's."""
         import re
 
@@ -3692,20 +3758,11 @@ class KeyedCatalog:
             vals[col] = lit
         if set(vals) != {k.lower() for k in m.keys}:
             return None
-        row = (
-            self.spark.range(1)
-            .select(
-                *[
-                    F.expr(vals[k.lower()])
-                    .cast(m.schema[k].dataType)
-                    .alias(k)
-                    for k in m.keys
-                ]
-            )
-            .select(_bucket_expr(m.keys, m.num_buckets).alias("b"))
-            .first()
+        probe = self._literal_row(
+            {k: m.schema[k].dataType for k in m.keys},
+            [vals[k.lower()] for k in m.keys],
         )
-        return [int(row["b"])]
+        return self._batch_buckets(probe, m)
 
     def _append(
         self,
@@ -5125,10 +5182,11 @@ class KeyedCatalog:
         manifest: dict | None = None,
         stats_bounds: "Mapping[str, tuple] | None" = None,
         bloom_probe: "Mapping[str, list[int]] | None" = None,
+        meta: "TableMeta | None" = None,
     ) -> DataFrame:
-        if not self.has_table(table_name):
-            raise NameError(f"no such table: {table_name}")
-        m = self.meta(table_name)
+        # ``meta=`` hands in the caller's already-read meta (read_table
+        # plans with one meta read and one manifest resolution)
+        m = meta if meta is not None else self._table_meta(table_name)
         schema = m.schema
         man = (
             manifest
@@ -5150,8 +5208,7 @@ class KeyedCatalog:
         # to the current logical schema. Segments sharing a mapping
         # read as one group (explicit schema: evolved columns
         # null-fill, no footer merging); differing groups union by
-        # name. The never-renamed fast path is a single read exactly
-        # as before.
+        # name. The never-renamed fast path is a single group.
         cur_sc = {
             m.colmap.get(f.name, f.name): f.name for f in schema.fields
         }
@@ -5164,27 +5221,12 @@ class KeyedCatalog:
                 sc = seg_sc.get(seg) or cur_sc
                 key = tuple(sorted(sc.items()))
                 groups.setdefault(key, []).append(path)
-            frames = []
-            for key, paths in groups.items():
-                if key == cur_key:
-                    frames.append(
-                        self.spark.read.schema(schema).parquet(*paths)
-                    )
-                    continue
-                sc = dict(key)
-                phys_fields, aliases = [], []
-                for f in schema.fields:
-                    stable = m.colmap.get(f.name, f.name)
-                    phys = sc.get(stable, f.name)
-                    phys_fields.append(
-                        T.StructField(phys, f.dataType, True)
-                    )
-                    aliases.append(F.col(phys).alias(f.name))
-                frames.append(
-                    self.spark.read.schema(T.StructType(phys_fields))
-                    .parquet(*paths)
-                    .select(*aliases)
+            frames = [
+                self._scan_leaves(
+                    m, paths, None if key == cur_key else dict(key)
                 )
+                for key, paths in groups.items()
+            ]
             out = frames[0]
             for fr in frames[1:]:
                 out = out.unionByName(fr)
@@ -5330,25 +5372,49 @@ class KeyedCatalog:
         reference's empty-result-only guard, reference:sql.py:401-404).
 
         All predicates are plain Catalyst filters → pushed to Parquet
-        row-group stats. A fully-specified point lookup
-        (lowest == highest, no None slots) prunes to one hash bucket's
-        paths before the scan even starts. Projection via ``columns``
-        prunes the scan column set.
+        row-group stats. Planning costs one meta read and one manifest
+        resolution; the read then runs one scan job and no file-listing
+        job (the manifest names every leaf, see :meth:`_scan_leaves`).
+        A fully-specified point lookup (lowest == highest, no None
+        slots) reads only the leaves of the key's hash bucket.
+        Projection via ``columns`` prunes the scan column set.
         """
-        table_name = self._qualify(table_name, schema)
+        return self._read(
+            self._qualify(table_name, schema),
+            lowest=lowest,
+            highest=highest,
+            columns=columns,
+            version=version,
+            as_of=as_of,
+            stats_bounds=stats_bounds,
+            bloom_point=bloom_point,
+        )[0]
+
+    def _read(
+        self,
+        table_name: str,
+        *,
+        lowest: Any = None,
+        highest: Any = None,
+        columns: Sequence[str] | None = None,
+        version: int | None = None,
+        as_of: "float | int | None" = None,
+        stats_bounds: "Mapping[str, tuple] | None" = None,
+        bloom_point: "Mapping[str, Any] | None" = None,
+    ) -> "tuple[DataFrame, TableMeta]":
+        """:meth:`read_table` of a qualified name in one planning pass;
+        also returns the meta it planned with (for :meth:`read_pandas`)."""
         if as_of is not None:
             if version is not None:
                 raise ValueError("pass either version= or as_of=, not both")
             version = self.version_as_of(table_name, as_of)
-        m = self.meta(table_name)
-        if self.has_table(table_name):
-            # point-lookup bucket pruning must hash under the TARGET
-            # snapshot's recorded bucket count (rebucket evolution) —
-            # the same pinned manifest then serves the scan
-            _man = self._manifest(table_name, version=version)
-            m = self._resolve_nb(m, _man)
-        else:
-            _man = None
+        m = self._table_meta(table_name)
+        # point-lookup bucket pruning must hash under the TARGET
+        # snapshot's recorded bucket count (rebucket evolution) — the
+        # same pinned manifest then serves the scan
+        _man = self._manifest(table_name, version=version)
+        m = self._resolve_nb(m, _man)
+        tbl_schema = m.schema
         nkeys = len(m.keys)
 
         def norm_bound(bound):
@@ -5368,6 +5434,19 @@ class KeyedCatalog:
             return tuple(bound)
 
         lo, hi = norm_bound(lowest), norm_bound(highest)
+        # every argument is validated against the parsed schema before
+        # any Spark work: no analysis round trip, no job
+        for bound in (lo, hi):
+            for k, b in zip(m.keys, bound or ()):
+                if b is not None:
+                    self._check_bound_type(tbl_schema[k].dataType, b, k)
+        for arg, cols in (
+            ("bloom_point", bloom_point),
+            ("stats_bounds", stats_bounds),
+        ):
+            for col in cols or ():
+                if col not in tbl_schema.names:
+                    raise NameError(f"{arg} column {col!r} not in table")
 
         buckets = None
         if (
@@ -5376,22 +5455,17 @@ class KeyedCatalog:
             and lo == hi
             and all(b is not None for b in lo)
         ):
-            # point lookup → single-bucket path pruning
-            probe = local_frame(
-                self.spark,
-                [tuple(lo)],
-                T.StructType([m.schema[k] for k in m.keys]),
+            # point lookup → single-bucket path pruning, the bucket
+            # folded on the driver from the writer's own expression
+            probe = self._literal_row(
+                {k: tbl_schema[k].dataType for k in m.keys},
+                ["?"] * nkeys,
+                lo,
             )
             buckets = self._batch_buckets(probe, m)
 
         bloom_probe = None
         if bloom_point:
-            tbl_schema = m.schema
-            for col in bloom_point:
-                if col not in tbl_schema.names:
-                    raise NameError(
-                        f"bloom_point column {col!r} not in table"
-                    )
             bloom_probe = {
                 col: self._bloom_positions(val, tbl_schema[col].dataType)
                 for col, val in bloom_point.items()
@@ -5411,7 +5485,7 @@ class KeyedCatalog:
             decision: dict = {}
             for col, (slo, shi) in stats_bounds.items():
                 info: dict = {"probed": True}
-                if col in m.sketch_columns and _man is not None:
+                if col in m.sketch_columns:
                     try:
                         # decode from the ALREADY-pinned manifest and
                         # estimate range + total in ONE tiny job —
@@ -5452,7 +5526,7 @@ class KeyedCatalog:
                                 "(sketch estimate); skipping the "
                                 "min/max leaf probe — consider a "
                                 "tighter range",
-                                stacklevel=2,
+                                stacklevel=3,
                             )
                     except (TypeError, ValueError):
                         pass  # non-numeric bounds: probe as before
@@ -5467,31 +5541,33 @@ class KeyedCatalog:
             manifest=_man,
             stats_bounds=eff_bounds,
             bloom_probe=bloom_probe,
+            meta=m,
         )
-        if bloom_point:
-            for col, val in bloom_point.items():
-                df = df.where(F.col(col) == val)
-        if stats_bounds:
-            for col, (slo, shi) in stats_bounds.items():
-                if col not in df.columns:
-                    raise NameError(f"stats_bounds column {col!r} not in table")
-                if slo is not None:
-                    df = df.where(F.col(col) >= slo)
-                if shi is not None:
-                    df = df.where(F.col(col) <= shi)
-
-        for bound, is_lower in ((lo, True), (hi, False)):
-            if bound is None:
+        # every predicate in ONE Column and one where (each where is an
+        # analysis round trip); a key slot with lowest == highest is an
+        # equality
+        conds = [F.col(c) == v for c, v in (bloom_point or {}).items()]
+        for col, (slo, shi) in (stats_bounds or {}).items():
+            if slo is not None:
+                conds.append(F.col(col) >= slo)
+            if shi is not None:
+                conds.append(F.col(col) <= shi)
+        for i, k in enumerate(m.keys):
+            kl = lo[i] if lo is not None else None
+            kh = hi[i] if hi is not None else None
+            if kl is not None and kl == kh:
+                conds.append(F.col(k) == kl)
                 continue
-            for k, b in zip(m.keys, bound):
-                if b is None:
-                    continue
-                self._check_bound_type(df.schema[k].dataType, b, k)
-                df = df.where(F.col(k) >= b if is_lower else F.col(k) <= b)
+            if kl is not None:
+                conds.append(F.col(k) >= kl)
+            if kh is not None:
+                conds.append(F.col(k) <= kh)
+        if conds:
+            df = df.where(functools.reduce(operator.and_, conds))
         if columns is not None:
-            need = [c for c in df.columns if c in set(columns) | set(m.keys)]
-            df = df.select(*need)
-        return df
+            want = set(columns) | set(m.keys)
+            df = df.select(*[c for c in tbl_schema.names if c in want])
+        return df, m
 
     @staticmethod
     def _check_bound_type(dt: T.DataType, bound: Any, key: str) -> None:
@@ -5529,8 +5605,7 @@ class KeyedCatalog:
         the driver — only for small result sets; the distributed API is
         read_table."""
         table_name = self._qualify(table_name, kwargs.pop("schema", None))
-        m = self.meta(table_name)
-        df = self.read_table(table_name, **kwargs)
+        df, m = self._read(table_name, **kwargs)
         pdf = df.toPandas()
         for f in df.schema.fields:
             if isinstance(f.dataType, (T.TimestampType,)):

@@ -671,6 +671,7 @@ def test_co_occurrence_lift_known_values(spark):
                 if r["item_a"].startswith("m")]
 
 
+@pytest.mark.stress
 def test_pq_recall_planted_and_corpus(spark):
     """PQ asymmetric distance: planted near-identical vectors are
     top-1 (their codes quantize identically — the high-signal

@@ -518,8 +518,8 @@ def test_dml_job_budgets(spark, tmp_path):
     regression relitigations end here). Budgets pin the round-9
     one-pass probe: a point delete is probe + sidecar write + commit,
     not the old probe/count/head/write cascade; a full-key-equality
-    predicate additionally pins its bucket arithmetically (the
-    range(1) hash job + a 1-bucket probe)."""
+    predicate additionally pins its bucket arithmetically (a hash
+    folded on the driver with no job, then a 1-bucket probe)."""
     from pandabase_spark.io import KeyedCatalog
 
     cat = KeyedCatalog(spark, str(tmp_path / "wh"), default_buckets=8)
@@ -570,7 +570,8 @@ def test_dml_job_budgets(spark, tmp_path):
     cat.drop_table("jb_w")
 
     # DV point delete, full-key equality: arithmetic bucket pin
-    # (range(1) job) + 1-bucket probe agg + sidecar write = 3, +1 slack
+    # (folded on the driver, no job) + 1-bucket probe agg + sidecar
+    # write (measured 3)
     n = jobs_on_fresh_table(
         "jb_dp", lambda t: cat.delete_rows(t, "k = 42"))
     assert n <= 4, f"point delete ran {n} jobs (budget 4)"
@@ -766,3 +767,66 @@ def test_delta_scan_plans_one_scan_any_tuple_count(spark, tmp_path):
     a = plan_audit(df)
     assert a.parquet_scans == 1
     assert a.join_safe
+
+
+def test_read_job_budgets(spark, tmp_path):
+    """Keyed reads cost their scan: a point read, a narrow key range and
+    a Bloom point read each run ONE Spark job on a table with more live
+    leaves than ``parallelPartitionDiscovery.threshold`` (32). The
+    point bucket and the Bloom probe positions fold on the driver (no
+    job), and the manifest's leaves are planned in scans of at most
+    the threshold, so Spark never launches its "Listing leaf files"
+    job."""
+    from pandabase_spark.io import KeyedCatalog
+
+    cat = KeyedCatalog(spark, str(tmp_path / "wh"), default_buckets=8)
+    sc = spark.sparkContext
+
+    def batch(lo: int, hi: int):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            F.format_string("name-%d", F.col("id")).alias("name"),
+            (F.col("id") * 2.0).alias("v"),
+        )
+
+    cat.to_table(batch(0, 200), "rb", keys=["k"], bloom_columns=["name"])
+    for i in range(1, 6):
+        cat.to_table(
+            batch(200 * i, 200 * (i + 1)), "rb", keys=["k"], how="append"
+        )
+    assert cat.table_detail("rb")["n_segments"] == 6  # 48 live leaves
+
+    # the session's status store holds each job's description; the
+    # public status tracker has only job ids
+    store = sc._jsc.sc().statusStore()
+
+    def jobs_of(name: str, fn) -> list[str]:
+        group = f"rjb-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        descs = []
+        for jid in sc.statusTracker().getJobIdsForGroup(group):
+            d = store.job(jid).description()
+            descs.append(d.get() if d.isDefined() else "")
+        return descs
+
+    reads = {
+        "point": lambda: cat.read_table(
+            "rb", lowest=417, highest=417).collect(),
+        "narrow": lambda: cat.read_table(
+            "rb", lowest=100, highest=1100).collect(),
+        "bloom_point": lambda: cat.read_table(
+            "rb", bloom_point={"name": "name-733"}).collect(),
+    }
+    for name, fn in reads.items():
+        descs = jobs_of(name, fn)
+        assert len(descs) == 1, f"{name} read ran {descs} (budget 1 job)"
+        assert not [
+            d for d in descs if d.startswith("Listing leaf files")
+        ], descs
+    assert [r["v"] for r in reads["point"]()] == [834.0]
+    assert len(reads["narrow"]()) == 1001
+    assert [r["k"] for r in reads["bloom_point"]()] == [733]

@@ -2012,6 +2012,7 @@ def test_compact_passes_retention_to_vacuum(spark, catalog):
     assert catalog.read_table("cr_t", version=2).count() == 160
 
 
+@pytest.mark.stress
 def test_occ_two_driver_race(spark, catalog, tmp_path):
     """THE 100 TB contention mode, for real: two INDEPENDENT Spark
     drivers (separate JVMs via subprocess, separate KeyedCatalog
@@ -2079,6 +2080,7 @@ def test_occ_two_driver_race(spark, catalog, tmp_path):
     boot.drop_table("occ_t")
 
 
+@pytest.mark.stress
 def test_occ_three_writer_vacuum_soak(spark, catalog, tmp_path):
     """r10 verdict ask #8: THREE independent Spark drivers race
     appends/upserts/deletes on one table while the third interleaves
