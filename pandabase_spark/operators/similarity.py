@@ -26,6 +26,7 @@ extension surface for the driver's ``embeddings`` table.
 from __future__ import annotations
 
 import hashlib
+import math
 import struct
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -68,7 +69,33 @@ def _array_literal(vals: list[float]) -> Column:
 
 
 def _arr_sql(vals: list[float]) -> str:
-    return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
+    """SQL text of a literal double array — the one place a vector is
+    rendered into SQL. Non-finite components are rejected: ``repr``
+    spells them ``nan``/``inf``, which the parser would read as column
+    names and fail on with an unrelated analysis error."""
+    vals = [float(v) for v in vals]
+    for x in vals:
+        if not math.isfinite(x):
+            raise ValueError(
+                f"vector contains non-finite component {x!r}; clean the "
+                f"corpus (drop or clamp non-finite embedding values) "
+                f"before training or building the index"
+            )
+    return "array(" + ",".join(repr(x) + "D" for x in vals) + ")"
+
+
+# zip_with terms of the two vector folds: ``x`` is the vector's
+# element, ``y`` the centroid's
+_DOT_TERM = "(x, y) -> cast(x as double) * y"
+_SQDIST_TERM = "(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)"
+
+
+def _fold_sql(a: str, b: str, term: str) -> str:
+    """SQL text summing ``term`` over the zipped elements of the array
+    expressions ``a`` and ``b``: the one definition of the dot and
+    squared-distance folds, so training and scoring compute the same
+    doubles."""
+    return f"aggregate(zip_with({a}, {b}, {term}), 0D, (acc, v) -> acc + v)"
 
 
 def _dot_sql(vec_col: str, vals: list[float]) -> str:
@@ -77,10 +104,7 @@ def _dot_sql(vec_col: str, vals: list[float]) -> str:
     server-parsed string: building n_cells such folds through the
     Column API costs ~90 py4j round trips each (lambda plumbing), ~1.4s
     of driver time per assignment at 16×64 — the string parses in ~1ms."""
-    return (
-        f"aggregate(zip_with(`{vec_col}`, {_arr_sql(vals)}, "
-        "(x, y) -> cast(x as double) * y), 0D, (acc, v) -> acc + v)"
-    )
+    return _fold_sql(f"`{vec_col}`", _arr_sql(vals), _DOT_TERM)
 
 
 def _plane_literal(plane: list[float]) -> Column:
@@ -267,11 +291,12 @@ def _train_sample(
     corpus: DataFrame, *, id_col: str, vec_col: str,
     sample_mod: "int | None",
 ) -> DataFrame:
-    """The (_id, _v) k-means training frame both trainers iterate
-    over: the deterministic 1/mod hash-sample of the corpus, spread
-    across the cluster (a sampled single-file source would otherwise
-    run every Lloyd stage as one task). Callers persist it for the
-    Lloyd loop and release it when training ends."""
+    """The (_id, _v) k-means training frame that :func:`_lloyd` and
+    :func:`ivf_centroids_df` iterate over: the deterministic 1/mod
+    hash-sample of the corpus, spread across the cluster (a sampled
+    single-file source would otherwise run every Lloyd stage as one
+    task). Callers persist it for the Lloyd loop and release it when
+    training ends."""
     train = corpus.select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
     )
@@ -287,16 +312,175 @@ def _train_sample(
 def _seed_vectors(train: DataFrame, n: int) -> list:
     """The ``n`` training rows with the smallest ``xxhash64(id)`` —
     the deterministic k-means seeds (a partial TakeOrdered, not a
-    full sort). One collect serves every trainer drawing seeds from
-    the same sample: the ordering is a property of the rows, so the
-    first ``n_cells`` (or ``k``) rows of one ordered prefix are
-    exactly what each trainer would have collected itself."""
+    full sort). One collect serves every space :func:`_lloyd` trains:
+    the ordering is a property of the rows, so the first ``n_cells``
+    (or ``k``) rows of one ordered prefix are exactly the rows a
+    smaller collect would return."""
     return (
         train.orderBy(F.xxhash64(F.col("_id").cast("string")))
         .limit(n)
         .select("_v")
         .collect()
     )
+
+
+def _lloyd(
+    corpus: DataFrame,
+    *,
+    id_col: str,
+    vec_col: str,
+    sample_mod: "int | None",
+    iters: int,
+    n_cells: "int | None" = None,
+    m: "int | None" = None,
+    k: int = 0,
+    tol: "float | None" = None,
+    info: "dict | None" = None,
+) -> tuple:
+    """The Lloyd k-means kernel behind :func:`ivf_centroids` and
+    :func:`pq_codebooks`. It trains up to ``1 + m`` independent spaces
+    over one persisted :func:`_train_sample` frame:
+
+    - space 0, when ``n_cells`` is given: the spherical coarse
+      quantizer — a row goes to the centroid of largest dot product
+      and the updated centroid is the unit-normalised mean;
+    - spaces 1..m, when ``m`` is given: the PQ subspaces, the ``j``-th
+      ``dim/m`` slice of each vector with ``k`` codes — a slice goes
+      to the code of least squared L2 distance and the update is the
+      raw mean.
+
+    Seeds come from one :func:`_seed_vectors` prefix of
+    ``max(n_cells, k)`` rows: space 0 takes the first ``n_cells``
+    (unit-normalised), each subspace the slices of the first ``k``.
+    Each iteration is one aggregate keyed ``(space, cell, pos)`` and
+    one collect: an iteration depends only on the previous centroids
+    of each space, so all spaces share the scan. Assignment ties go to
+    the lowest cell id, and a cell that receives no row keeps its
+    previous centroid.
+
+    ``tol`` turns ``iters`` from a fixed count into a cap: the loop
+    stops once the largest L2 movement of any centroid in an update is
+    at most ``tol``. ``info`` receives ``iters_run`` and
+    ``final_move`` (None without ``tol``).
+
+    Returns ``(centroids, codebooks)``; an untrained space is None.
+    """
+    coarse = n_cells is not None
+    train = _train_sample(
+        corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
+    ).persist()
+    try:
+        seeds = [
+            [float(x) for x in r["_v"]]
+            for r in _seed_vectors(
+                train, max(n_cells or 0, k if m is not None else 0)
+            )
+        ]
+        if coarse and len(seeds) < n_cells:
+            raise ValueError(
+                f"need at least n_cells={n_cells} training vectors, "
+                f"got {len(seeds)}"
+            )
+        if m is not None:
+            if not seeds:
+                raise ValueError("cannot train PQ on an empty corpus")
+            if len(seeds) < k:
+                raise ValueError(
+                    f"need at least k={k} training vectors, "
+                    f"got {len(seeds)}"
+                )
+        dim = len(seeds[0]) if seeds else 0
+        if m is not None and dim % m != 0:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        subs = range(m or 0)
+        d = dim // m if m else dim
+
+        def _unit(vec: list[float]) -> list[float]:
+            n = sum(x * x for x in vec) ** 0.5
+            return [x / n for x in vec] if n > 0 else list(vec)
+
+        spaces: dict[int, list[list[float]]] = {}
+        if coarse:
+            spaces[0] = [_unit(v) for v in seeds[:n_cells]]
+        for j in subs:
+            spaces[1 + j] = [v[j * d : (j + 1) * d] for v in seeds[:k]]
+        # a space's score array is its fold over a literal array of its
+        # centroids, one transform per space
+        folds = {
+            s: _fold_sql("_v", "c", _DOT_TERM) if s == 0
+            else _fold_sql(
+                f"slice(_v, {(s - 1) * d + 1}, {d})", "c", _SQDIST_TERM
+            )
+            for s in spaces
+        }
+        cells = ",".join(
+            f"cast(array_position(_d{s}, "
+            f"{'array_max' if s == 0 else 'array_min'}(_d{s})) - 1 as int)"
+            for s in spaces
+        )
+        # each row explodes to the coarse copy of its vector (positions
+        # below `off`) followed by the PQ copy; position p maps to
+        # (space, pos) by arithmetic, and its cell is the space's slot
+        # in the row's cell array
+        vals = "concat(_v, _v)" if coarse and subs else "_v"
+        off = dim if coarse else 0
+        space = f"if(_p < {off}, 0, cast(1 + (_p - {off}) div {d} as int))"
+        keys = [
+            f"{space} as _s",
+            f"element_at(_cells, {space} + {int(coarse)}) as _c",
+            f"if(_p < {off}, _p, (_p - {off}) % {d}) as _q",
+        ]
+        iters_run, move = 0, None
+        for _ in range(iters):
+            # the score arrays are a projection of their own: the cell
+            # array reads each twice, and merged projections would fold
+            # twice. Expressions are SQL text, one parse per projection,
+            # where the Column API costs py4j round trips per call
+            scores = [
+                f"transform(array({','.join(map(_arr_sql, cents))}), "
+                f"c -> {folds[s]}) as _d{s}"
+                for s, cents in spaces.items()
+            ]
+            means = (
+                train.selectExpr(*scores, "_v")
+                .selectExpr(
+                    f"array({cells}) as _cells",
+                    f"posexplode({vals}) as (_p, _x)",
+                )
+                .groupBy(*[F.expr(k) for k in keys])
+                .agg(F.expr("avg(_x) as _m"))
+                .collect()
+            )
+            by_cell: dict[tuple, dict[int, float]] = {}
+            for r in means:
+                by_cell.setdefault((r["_s"], r["_c"]), {})[r["_q"]] = r["_m"]
+            updated = {}
+            for s, cents in spaces.items():
+                updated[s] = []
+                for c, old in enumerate(cents):
+                    got = by_cell.get((s, c))
+                    if got is None:
+                        updated[s].append(old)
+                    else:
+                        vec = [got[p] for p in sorted(got)]
+                        updated[s].append(_unit(vec) if s == 0 else vec)
+            iters_run += 1
+            if tol is not None:
+                move = max(
+                    sum((a - b) ** 2 for a, b in zip(o, n)) ** 0.5
+                    for s in spaces
+                    for o, n in zip(spaces[s], updated[s])
+                )
+            spaces = updated
+            if tol is not None and move <= tol:
+                break
+    finally:
+        train.unpersist()
+    if info is not None:
+        info["iters_run"] = iters_run
+        info["final_move"] = move
+    books = [spaces[1 + j] for j in subs] if m is not None else None
+    return spaces.get(0), books
 
 
 def ivf_centroids(
@@ -309,107 +493,34 @@ def ivf_centroids(
     tol: "float | None" = None,
     sample_mod: int | None = None,
     info: "dict | None" = None,
-    _train: "DataFrame | None" = None,
-    _seed_rows: "list | None" = None,
 ) -> list[list[float]]:
-    """Train a spherical-k-means coarse quantizer; returns unit-norm
-    centroids as plain Python lists (n_cells × dim floats — an index
-    artifact, intentionally driver-side and broadcastable as literals).
+    """Train a spherical-k-means coarse quantizer; returns ``n_cells``
+    unit-norm centroids as plain Python lists (an index artifact,
+    intentionally driver-side and broadcastable as literals).
 
-    Deterministic end to end: seeds are the ``n_cells`` rows with the
-    smallest ``xxhash64(id)`` (a partial TakeOrdered, not a full sort),
-    and Lloyd updates use exact per-cell means via posexplode →
-    groupBy(cell, pos) → avg — one narrow scan plus one
-    (cell × dim)-key aggregate per iteration, partial-combined map-side.
+    This is :func:`_lloyd` with the coarse space only. Seeds are the
+    ``n_cells`` training rows with the smallest ``xxhash64(id)``; a row
+    goes to the centroid of largest dot product (ties to the lowest
+    cell), and an update is the unit-normalised exact mean of a cell's
+    rows (an empty cell keeps its previous centroid). Deterministic
+    end to end.
 
-    ``tol`` turns ``iters`` from a fixed count into a CAP: the loop
-    stops once the largest per-centroid L2 movement of an update falls
-    to ``tol`` or below — k-means converges at data-dependent speed,
-    and every iteration past convergence is a full scan+aggregate of
-    the training sample bought for nothing. ``info`` (optional dict)
-    receives ``iters_run`` and ``final_move`` so callers can record
-    the convergence fact next to the build time.
+    ``tol`` turns ``iters`` from a fixed count into a cap: the loop
+    stops once the largest per-centroid L2 movement of an update is at
+    most ``tol`` — every iteration past convergence is a full scan and
+    aggregate of the training sample bought for nothing. ``info``
+    (optional dict) receives ``iters_run`` and ``final_move`` (None
+    without ``tol``).
 
-    100 TB shape: pass ``sample_mod=m`` to train on the deterministic
-    1/m hash-sample of the corpus (standard IVF practice — centroid
-    quality needs samples, not the corpus); the full corpus is only
-    touched by the one-pass cell assignment afterwards.
-
-    ``_train`` / ``_seed_rows`` are the builder-sharing seam (r14):
-    a caller that trains BOTH a coarse quantizer and PQ codebooks on
-    the same sample (``write_ivfpq_index``) builds the persisted
-    sample and runs the one seed TakeOrdered once, passing both in —
-    the rows and their ordering are identical to what this function
-    would compute itself, so the trained artifact is unchanged while
-    the duplicate sample materialization and seed job disappear.
-    A provided ``_train`` must be the persisted :func:`_train_sample`
-    frame; its lifecycle belongs to the caller.
+    ``sample_mod=m`` trains on the deterministic 1/m hash-sample of
+    the corpus (standard IVF practice: centroid quality needs samples,
+    not the corpus); the full corpus is only touched by the one-pass
+    cell assignment afterwards.
     """
-    if _train is not None:
-        train = _train
-    else:
-        # the TRAINING SAMPLE is re-scanned once per Lloyd iteration
-        # plus the seed job — persist it for the loop, spread across
-        # the cluster first (a sampled single-file source would
-        # otherwise run every Lloyd stage as one task). That is what
-        # sample_mod is for at 100 TB: the sample is sized to fit the
-        # cluster, while the full corpus is only ever touched by the
-        # one-pass assignment. Both trainers spread identically,
-        # preserving their parity pin.
-        train = _train_sample(
-            corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
-        ).persist()
-    try:
-        seeds = (
-            _seed_rows[:n_cells] if _seed_rows is not None
-            else _seed_vectors(train, n_cells)
-        )
-        if len(seeds) < n_cells:
-            raise ValueError(
-                f"need at least n_cells={n_cells} training vectors, "
-                f"got {len(seeds)}"
-            )
-
-        def _unit(vec: list[float]) -> list[float]:
-            n = sum(x * x for x in vec) ** 0.5
-            return [x / n for x in vec] if n > 0 else list(vec)
-
-        centroids = [_unit([float(x) for x in r["_v"]]) for r in seeds]
-        iters_run, move = 0, None
-        for _ in range(iters):
-            assigned = _with_cell(
-                train, "_v", centroids, out="_cell"
-            ).select("_cell", F.posexplode("_v").alias("_pos", "_x"))
-            means = (
-                assigned.groupBy("_cell", "_pos")
-                .agg(F.avg("_x").alias("_m"))
-                .collect()
-            )
-            by_cell: dict[int, dict[int, float]] = {}
-            for r in means:
-                by_cell.setdefault(r["_cell"], {})[r["_pos"]] = r["_m"]
-            updated = [
-                _unit([by_cell[c][p] for p in sorted(by_cell[c])])
-                if c in by_cell
-                else centroids[c]  # empty cell keeps its previous centroid
-                for c in range(n_cells)
-            ]
-            iters_run += 1
-            if tol is not None:
-                move = max(
-                    sum((a - b) ** 2 for a, b in zip(o, n)) ** 0.5
-                    for o, n in zip(centroids, updated)
-                )
-            centroids = updated
-            if tol is not None and move <= tol:
-                break
-        if info is not None:
-            info["iters_run"] = iters_run
-            info["final_move"] = move
-        return centroids
-    finally:
-        if _train is None:
-            train.unpersist()
+    return _lloyd(
+        corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod,
+        iters=iters, n_cells=n_cells, tol=tol, info=info,
+    )[0]
 
 
 def _unit_expr(v: Column) -> Column:
@@ -511,19 +622,11 @@ def ivf_centroids_df(
     """
     from pyspark.sql.window import Window
 
-    train = corpus.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    )
-    if sample_mod is not None:
-        train = train.where(
-            F.pmod(F.xxhash64("_id"), F.lit(sample_mod)) == 0
-        )
-    # persist + spread the TRAINING SAMPLE for the seed job + Lloyd
-    # loop (same rationale and the same repartition as ivf_centroids,
-    # so the two trainers stay parity-identical); the centroid frames
-    # are already lineage-cut via localCheckpoint
-    train = train.repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism
+    # the same persisted sample as ivf_centroids, so the two trainers
+    # stay parity-identical; the centroid frames are already
+    # lineage-cut via localCheckpoint
+    train = _train_sample(
+        corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
     ).persist()
     try:
         order = F.xxhash64(F.col("_id").cast("string"))
@@ -888,32 +991,11 @@ def _centroids_literal_df(spark, centroids: "list[list[float]]") -> DataFrame:
     EVERY write job that consumes it (a count of the same frame is
     0.15s; a JVM-built equivalent writes in 0.25s) — and this frame
     exists precisely to be written as the index's centroid sidecar.
-    ``repr(float)`` literals round-trip IEEE doubles exactly, so the
-    persisted quantizer is bit-identical to the trained one.
-
-    Non-finite centroid components are rejected loudly: Python repr
-    spells them ``inf``/``nan``, which Spark's non-ANSI string→double
-    cast parses to NULL — a corpus containing a non-finite embedding
-    would otherwise silently persist a quantizer with null array
-    elements (every later probe distance against that cell would be
-    null) instead of failing the index build."""
-    import math
-
-    for i, c in enumerate(centroids):
-        for x in c:
-            if not math.isfinite(x):
-                raise ValueError(
-                    f"centroid {i} contains non-finite component {x!r}; "
-                    f"clean the corpus (drop or clamp non-finite "
-                    f"embedding values) before building the index"
-                )
+    :func:`_arr_sql` literals round-trip IEEE doubles exactly, so the
+    persisted quantizer is bit-identical to the trained one, and a
+    non-finite component raises instead of persisting as NULL."""
     rows = ", ".join(
-        "struct(cast({} as int) as cell, array({}) as cvec)".format(
-            i,
-            ", ".join(
-                f"cast('{float(x)!r}' as double)" for x in c
-            ),
-        )
+        f"struct(cast({i} as int) as cell, {_arr_sql(c)} as cvec)"
         for i, c in enumerate(centroids)
     )
     return (
@@ -1151,7 +1233,12 @@ def write_ivfpq_index(
     reads ~nprobe/n_cells of THAT. Both artifacts are deterministic
     and prebuildable via ``centroids=`` / ``codebooks=`` (the
     ingest-time pattern, and how the lossless-PQ exactness gate
-    injects enumerated codebooks).
+    injects enumerated codebooks). Whichever of the two is not given
+    trains on the raw corpus in one :func:`_lloyd` call — with both
+    missing, the quantizer and the codebooks share the sample, the
+    seed collect and one aggregate per Lloyd iteration, and each
+    equals what :func:`ivf_centroids` / :func:`pq_codebooks` return
+    on their own.
 
     ``residual=True`` stores Jégou et al.'s ACTUAL IVFADC encoding:
     each vector's PQ code quantizes its RESIDUAL against its cell's
@@ -1164,81 +1251,26 @@ def write_ivfpq_index(
     shifts — measured r12); ``anchors=`` overrides it with an
     explicit per-cell list (how the exactness gate keeps residual
     arithmetic integer-exact). Codebooks (when trained here) train on
-    the residual frame; the flag persists in a ``meta`` sidecar and
-    the anchors in an ``anchors`` sidecar, so serve/append
-    transparently apply the same shift (``q − a[cell]`` per probed
-    cell at query time — ADC distances are L2-identical under any
-    common per-cell shift)."""
+    the residual frame, after assignment; the flag persists in a
+    ``meta`` sidecar and the anchors in an ``anchors`` sidecar, so
+    serve/append transparently apply the same shift (``q − a[cell]``
+    per probed cell at query time — ADC distances are L2-identical
+    under any common per-cell shift)."""
     spark = corpus.sparkSession
-    # builder sharing (r14): when BOTH the coarse quantizer and the
-    # codebooks train here on the raw corpus (the non-residual
-    # trained path), they iterate over the SAME deterministic sample
-    # and draw seeds from the SAME ordered prefix — so materialize
-    # the persisted sample once and run one TakeOrdered of
-    # max(n_cells, n_codes) rows instead of two pipelines each paying
-    # its own sample scan + seed job. The centroid trainer sees rows,
-    # partitioning and seed values identical to its standalone path
-    # (bit-identical quantizer); pq training runs over the shared
-    # spread frame, which is also its correct 100 TB shape.
-    shared_train = None
-    try:
-        if (
-            centroids is None and codebooks is None
-            and not exact_codebooks and not residual
-        ):
-            shared_train = _train_sample(
-                corpus, id_col=id_col, vec_col=vec_col,
-                sample_mod=sample_mod,
-            ).persist()
-            shared_seeds = _seed_vectors(
-                shared_train, max(n_cells, n_codes)
-            )
-            # the two trainers are INDEPENDENT given the shared seeds
-            # and iterate the same ALREADY-MATERIALIZED cache (the
-            # seed collect warmed it), so run them concurrently (r15,
-            # guide §2.6): each trainer's own aggregates see identical
-            # rows, partitioning and seeds, so both artifacts stay
-            # bit-identical to the sequential path (pinned by
-            # test_ivfpq_shared_training_matches_sequential) — the
-            # overlap just back-fills one trainer's tiny per-iteration
-            # collect latencies with the other's tasks.
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark.util import inheritable_thread_target
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_c = pool.submit(
-                    inheritable_thread_target(spark)(
-                        lambda: ivf_centroids(
-                            corpus, id_col=id_col, vec_col=vec_col,
-                            n_cells=n_cells, iters=iters,
-                            sample_mod=sample_mod,
-                            _train=shared_train,
-                            _seed_rows=shared_seeds,
-                        )
-                    )
-                )
-                fut_b = pool.submit(
-                    inheritable_thread_target(spark)(
-                        lambda: pq_codebooks(
-                            corpus, id_col=id_col, vec_col=vec_col,
-                            m=m, k=n_codes, iters=iters,
-                            sample_mod=sample_mod,
-                            _train=shared_train,
-                            _seed_rows=shared_seeds,
-                        )
-                    )
-                )
-                centroids = fut_c.result()
-                codebooks = fut_b.result()
+    # codebooks of a residual or exact index come from the assigned
+    # frame below; every other missing artifact trains here, in one
+    # kernel call
+    train_books = codebooks is None and not exact_codebooks and not residual
+    if centroids is None or train_books:
+        cents, books = _lloyd(
+            corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod,
+            iters=iters, n_cells=n_cells if centroids is None else None,
+            m=m if train_books else None, k=n_codes,
+        )
         if centroids is None:
-            centroids = ivf_centroids(
-                corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
-                iters=iters, sample_mod=sample_mod,
-            )
-    finally:
-        if shared_train is not None:
-            shared_train.unpersist()
+            centroids = cents
+        if train_books:
+            codebooks = books
     cdf = (
         centroids if isinstance(centroids, DataFrame)
         else _centroids_literal_df(spark, centroids)
@@ -2104,11 +2136,7 @@ def ann_topk_indexed(
 def _sqdist_sql(vec_col: str, vals: "list[float]") -> str:
     """SQL text of squared L2 distance between ``vec_col`` and a
     literal array (same one-parsed-string rationale as _dot_sql)."""
-    return (
-        f"aggregate(zip_with(`{vec_col}`, {_arr_sql(vals)}, "
-        "(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)), "
-        "0D, (acc, v) -> acc + v)"
-    )
+    return _fold_sql(f"`{vec_col}`", _arr_sql(vals), _SQDIST_TERM)
 
 
 def _books_sql(codebooks: "list[list[list[float]]]") -> str:
@@ -2153,8 +2181,6 @@ def pq_codebooks(
     k: int = 16,
     iters: int = 2,
     sample_mod: int | None = None,
-    _train: "DataFrame | None" = None,
-    _seed_rows: "list | None" = None,
 ) -> "list[list[list[float]]]":
     """Train product-quantization codebooks (Jégou et al. 2011): the
     vector is split into ``m`` equal subspaces and each gets its own
@@ -2165,124 +2191,20 @@ def pq_codebooks(
     Returns ``codebooks[j][c] = subcentroid`` as plain Python lists
     (m·k·(d/m) floats — an index artifact, deliberately driver-side
     and literal-broadcastable, same contract as :func:`ivf_centroids`).
-    Deterministic: subspace seeds come from the ``k`` rows with the
-    smallest ``xxhash64(id)``; Lloyd updates are exact per-(subspace,
-    cell, position) means. ``sample_mod`` trains on the deterministic
-    1/mod hash-sample — codebook quality needs samples, not the
-    corpus.
 
-    Cost shape: ALL ``m`` subspaces train in ONE job per Lloyd
-    iteration — per row the m cell assignments are staged literal
-    folds, then a single posexplode keys the means by (subspace,
-    cell, position) — instead of m independent pipelines re-scanning
-    the sample m×iters times. The training frame is persisted across
-    iterations and released in a ``finally``.
-
-    ``_train`` / ``_seed_rows``: the builder-sharing seam (r14, same
-    contract as :func:`ivf_centroids`) — ``write_ivfpq_index`` trains
-    the coarse quantizer and the codebooks on the SAME sample, so it
-    materializes one persisted :func:`_train_sample` frame and one
-    seed TakeOrdered prefix and passes both trainers their slice.
+    This is :func:`_lloyd` with the ``m`` PQ subspaces only. Seeds are
+    the slices of the ``k`` training rows with the smallest
+    ``xxhash64(id)``; a slice goes to the code of least squared L2
+    distance (ties to the lowest code), and an update is the exact mean
+    of a code's slices (an empty code keeps its previous value). All
+    ``m`` subspaces train in one aggregate per iteration.
+    ``sample_mod`` trains on the deterministic 1/mod hash-sample —
+    codebook quality needs samples, not the corpus.
     """
-    if _train is not None:
-        train = _train
-    else:
-        # the SAME frame the sharing seam materializes — including its
-        # defaultParallelism repartition (r15 advisory fix): float mean
-        # accumulation order follows partition layout, so training the
-        # standalone path over a differently-partitioned frame made
-        # the shared-vs-sequential parity byte-equality layout-
-        # dependent; identical construction makes it hold by
-        # construction. The spread is also this path's correct 100 TB
-        # shape — a sampled single-file source would otherwise run
-        # every Lloyd stage as one task.
-        train = _train_sample(
-            corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
-        ).persist()
-    try:
-        seed_rows = (
-            _seed_rows[:k] if _seed_rows is not None
-            else _seed_vectors(train, k)
-        )
-        if not seed_rows:
-            raise ValueError("cannot train PQ on an empty corpus")
-        if len(seed_rows) < k:
-            raise ValueError(
-                f"need at least k={k} training vectors, "
-                f"got {len(seed_rows)}"
-            )
-        # dimensionality from the seeds already on the driver — the
-        # separate select(size(vec)).first() probe was one whole Spark
-        # job bought for a single integer (r14 optimization)
-        dim = len(seed_rows[0]["_v"])
-        if dim % m != 0:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        d = dim // m
-        books = [
-            [
-                [float(x) for x in r["_v"][j * d : (j + 1) * d]]
-                for r in seed_rows
-            ]
-            for j in range(m)
-        ]
-        for _ in range(iters):
-            staged = train
-            cell_cols = []
-            for j in range(m):
-                sv = f"_pb_sv{j}"
-                staged = staged.withColumn(
-                    sv, F.slice("_v", j * d + 1, d)
-                ).withColumn(
-                    f"_pb_d{j}",
-                    F.expr(
-                        "array("
-                        + ",".join(
-                            _sqdist_sql(sv, c) for c in books[j]
-                        )
-                        + ")"
-                    ),
-                )
-                cell_cols.append(
-                    (
-                        F.array_position(
-                            F.col(f"_pb_d{j}"),
-                            F.array_min(f"_pb_d{j}"),
-                        )
-                        - 1
-                    ).cast("int")
-                )
-            ex = (
-                staged.withColumn("_cells", F.array(*cell_cols))
-                .select("_cells", F.posexplode("_v").alias("_pos", "_x"))
-                .withColumn(
-                    "_j", F.expr(f"_pos div {d}").cast("int")
-                )
-                .withColumn("_sp", F.pmod("_pos", F.lit(d)))
-                .withColumn(
-                    "_cell", F.element_at("_cells", F.col("_j") + 1)
-                )
-            )
-            means = (
-                ex.groupBy("_j", "_cell", "_sp")
-                .agg(F.avg("_x").alias("_m"))
-                .collect()
-            )
-            upd: dict[tuple, dict[int, float]] = {}
-            for r in means:
-                upd.setdefault((r["_j"], r["_cell"]), {})[r["_sp"]] = r["_m"]
-            books = [
-                [
-                    [upd[(j, c)][sp] for sp in sorted(upd[(j, c)])]
-                    if (j, c) in upd
-                    else books[j][c]  # empty cell keeps its centroid
-                    for c in range(k)
-                ]
-                for j in range(m)
-            ]
-    finally:
-        if _train is None:
-            train.unpersist()
-    return books
+    return _lloyd(
+        corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod,
+        iters=iters, m=m, k=k,
+    )[1]
 
 
 def pq_encode(
@@ -2500,68 +2422,26 @@ def ann_topk_ivfpq(
 
     Both index artifacts are deterministic (hash-seeded k-means) and
     prebuildable via ``centroids=`` / ``codebooks=`` — the ingest-time
-    pattern; recall composes the two stages' floors and is pinned in
-    pytest. The cell-probe expansion reuses :func:`ann_topk_ivf`'s
-    struct-sort idiom and the scorer is the shared :func:`_adc_expr`.
+    pattern. Whichever is not given trains in one :func:`_lloyd` call
+    (both sharing one aggregate per Lloyd iteration), equal to
+    :func:`ivf_centroids` / :func:`pq_codebooks` run separately.
+    Recall composes the two stages' floors and is pinned in pytest.
+    The cell-probe expansion reuses :func:`ann_topk_ivf`'s struct-sort
+    idiom and the scorer is the shared :func:`_adc_expr`.
     Returns (query_id, vec_id, approx_dist, rank)."""
     from pyspark.sql.window import Window
 
     qid = query_id_col or id_col
-    if centroids is None and codebooks is None:
-        # both trainers iterate the same sample — share its persisted
-        # materialization and the seed TakeOrdered (r14, the
-        # write_ivfpq_index builder-sharing seam)
-        shared_train = _train_sample(
-            corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
-        ).persist()
-        try:
-            shared_seeds = _seed_vectors(
-                shared_train, max(n_cells, n_codes)
-            )
-            # independent trainers over the warmed cache run
-            # concurrently — same rationale and bit-identity argument
-            # as write_ivfpq_index's seam (r15, guide §2.6)
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark.util import inheritable_thread_target
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_c = pool.submit(
-                    inheritable_thread_target(corpus.sparkSession)(
-                        lambda: ivf_centroids(
-                            corpus, id_col=id_col, vec_col=vec_col,
-                            n_cells=n_cells, iters=iters,
-                            sample_mod=sample_mod,
-                            _train=shared_train,
-                            _seed_rows=shared_seeds,
-                        )
-                    )
-                )
-                fut_b = pool.submit(
-                    inheritable_thread_target(corpus.sparkSession)(
-                        lambda: pq_codebooks(
-                            corpus, id_col=id_col, vec_col=vec_col,
-                            m=m, k=n_codes, iters=iters,
-                            sample_mod=sample_mod,
-                            _train=shared_train,
-                            _seed_rows=shared_seeds,
-                        )
-                    )
-                )
-                centroids = fut_c.result()
-                codebooks = fut_b.result()
-        finally:
-            shared_train.unpersist()
-    if centroids is None:
-        centroids = ivf_centroids(
-            corpus, id_col=id_col, vec_col=vec_col,
-            n_cells=n_cells, iters=iters, sample_mod=sample_mod,
+    if centroids is None or codebooks is None:
+        cents, books = _lloyd(
+            corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod,
+            iters=iters, n_cells=n_cells if centroids is None else None,
+            m=m if codebooks is None else None, k=n_codes,
         )
-    if codebooks is None:
-        codebooks = pq_codebooks(
-            corpus, id_col=id_col, vec_col=vec_col, m=m, k=n_codes,
-            iters=iters, sample_mod=sample_mod,
-        )
+        if centroids is None:
+            centroids = cents
+        if codebooks is None:
+            codebooks = books
     encoded = pq_encode(
         ivf_assign(corpus, centroids, vec_col=vec_col),
         codebooks,

@@ -1401,6 +1401,33 @@ def test_centroid_literal_rejects_nonfinite(spark):
     assert got == {0: [1.0, 2.5e-17], 1: [-3.0, 4.0]}
 
 
+@pytest.mark.parametrize(
+    "call", ["ivf_centroids", "pq_codebooks", "write_ivfpq_index"]
+)
+def test_nonfinite_embedding_fails_training_clearly(spark, tmp_path, call):
+    """One NaN component in the corpus reaches a trained centroid
+    (its cell's mean), and rendering that centroid as a SQL literal
+    must raise a ValueError naming the cause, not an analysis error
+    about an unresolved column ``nanD``."""
+    from pandabase_spark.operators import similarity as S
+
+    rows = [
+        (i, [float((i * 7 + j) % 5 - 2) for j in range(8)])
+        for i in range(64)
+    ]
+    rows[5] = (5, [1.0, float("nan")] + [0.5] * 6)
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    calls = {
+        "ivf_centroids": lambda: S.ivf_centroids(emb, n_cells=4, iters=2),
+        "pq_codebooks": lambda: S.pq_codebooks(emb, m=4, k=4, iters=2),
+        "write_ivfpq_index": lambda: S.write_ivfpq_index(
+            emb, str(tmp_path / "idx"), n_cells=4, m=4, n_codes=4, iters=2
+        ),
+    }
+    with pytest.raises(ValueError, match="non-finite component nan"):
+        calls[call]()
+
+
 def test_ivfpq_shared_training_matches_sequential(spark, tmp_path):
     """The r14 builder-sharing seam: write_ivfpq_index training BOTH
     artifacts itself (one persisted sample + one seed TakeOrdered

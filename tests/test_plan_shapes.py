@@ -830,3 +830,28 @@ def test_read_job_budgets(spark, tmp_path):
     assert [r["v"] for r in reads["point"]()] == [834.0]
     assert len(reads["narrow"]()) == 1001
     assert [r["k"] for r in reads["bloom_point"]()] == [733]
+
+
+def test_ivfpq_index_write_job_budget(spark, tmp_path):
+    """Building an IVF-PQ index trains the coarse quantizer and the PQ
+    codebooks together: one seed collect, then one aggregate collect
+    per Lloyd iteration for both artifacts, then the sidecar and data
+    writes (measured 12 jobs warm; training the two artifacts in
+    separate Lloyd loops ran 16)."""
+    from pandabase_spark.operators.similarity import write_ivfpq_index
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    sc = spark.sparkContext
+    group = None
+    for i in range(2):  # warm run is the recorded fact
+        group = f"ivfpq-jb-{i}"
+        sc.setJobGroup(group, "write_ivfpq_index")
+        try:
+            write_ivfpq_index(
+                emb, str(tmp_path / f"idx{i}"), n_cells=8, m=8,
+                n_codes=16, iters=2, sample_mod=2,
+            )
+        finally:
+            sc.setJobGroup(None, None)
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= 12, f"write_ivfpq_index ran {n} jobs (budget 12)"

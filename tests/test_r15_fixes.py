@@ -1,6 +1,6 @@
 """Round-15 advisory fixes — focused regression pins.
 
-Each test pins one of the five r14 ADVICE items:
+The five r14 ADVICE items and the tests that pin them:
 1. word-mode shingles emit NO rows for NULL-text docs (the
    sequence/greatest explode used to emit one (id, NULL) shingle, so
    every NULL-text doc minhashed to the same signature);
@@ -17,8 +17,9 @@ Each test pins one of the five r14 ADVICE items:
    (which merges [1, 2.5] to double) instead of pinning LongType and
    raising;
 5. standalone ``pq_codebooks`` trains over the SAME
-   ``_train_sample``-shaped frame as the shared-training seam, so the
-   byte-equality parity test holds by construction at any core count.
+   ``_train_sample``-shaped frame as training shared with the coarse
+   quantizer; that parity is pinned by
+   ``tests/test_operators.py::test_ivfpq_shared_training_matches_sequential``.
 """
 
 from __future__ import annotations
@@ -141,31 +142,3 @@ def test_mixed_probe_rows_defer_to_classic_inference(spark):
     rows = [(1, 10), (2.5, 20)]
     with _pytest.raises(Exception, match="CANNOT_MERGE_TYPE"):
         spark.createDataFrame(rows, ["v", "est_count"])
-
-
-def test_standalone_pq_codebooks_matches_shared_training(spark):
-    """Parity by construction: the standalone trained path and the
-    sharing seam iterate the SAME repartitioned sample, so codebooks
-    are byte-identical (this was layout-dependent before r15)."""
-    from pandabase_spark.operators.similarity import (
-        _seed_vectors, _train_sample, pq_codebooks,
-    )
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * 7 + j) % 5 - 2) for j in range(8)])
-         for i in range(64)],
-        "vec_id long, embedding array<double>",
-    )
-    standalone = pq_codebooks(emb, m=4, k=4, iters=2, sample_mod=2)
-    train = _train_sample(
-        emb, id_col="vec_id", vec_col="embedding", sample_mod=2
-    ).persist()
-    try:
-        seeds = _seed_vectors(train, 4)
-        shared = pq_codebooks(
-            emb, m=4, k=4, iters=2, sample_mod=2,
-            _train=train, _seed_rows=seeds,
-        )
-    finally:
-        train.unpersist()
-    assert standalone == shared
